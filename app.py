@@ -14,6 +14,12 @@ checkpoints under {work-dir}/checkpoints — kill it and resubmit, it
 resumes from offsets + state. Default trigger is availableNow (drain
 the backlog and exit); --continuous keeps it running on a 30s trigger.
 
+--conf spark.sql.shuffle.partitions sets each checkpoint's state
+partition count for its whole life: the first run records it in the
+offset log and every resubmit reuses it, whatever the --conf says then.
+Pick it per deployment when a checkpoint first starts (Spark's default
+is 200).
+
 The reference's equivalent is `spamscope-topology submit`
 (src/cli/spamscope_topology.py:32-142).
 """

@@ -3,6 +3,16 @@
 The engine targets multi-executor clusters at 10^12-turn scale; these
 defaults encode the knobs that matter there (AQE, skew-join handling,
 Arrow batches) while remaining correct on local[N] for tests.
+
+`spark.sql.shuffle.partitions` defaults to the session's task slots
+(`sparkContext.defaultParallelism`: N for local[N], the executor cores
+on a cluster) — the reference's per-bolt `par=N`. AQE coalesces batch
+shuffles, but it never re-plans a stateful streaming stage, where every
+partition is one Python task per microbatch with a fixed worker-setup
+cost; one partition per slot keeps that cost at one task per core. A
+streaming checkpoint fixes its state layout when it first starts: its
+offset log records the partition count, and every restart uses that
+count whatever the session conf says.
 """
 
 from __future__ import annotations
@@ -10,8 +20,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
-
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
 
 def ensure_py_files(spark: SparkSession) -> None:
@@ -54,15 +62,13 @@ def build_session(
     """Create (or fetch) a SparkSession tuned for this engine.
 
     On a real cluster the master/executor sizing comes from spark-submit;
-    everything set here is cluster-size independent.
+    everything set here is cluster-size independent. With no master and
+    no SPARK_MASTER, the session runs local[N] over the usable CPUs, or
+    over SPARK_GRAFT_CPUS when that is set. shuffle_partitions defaults
+    to the session's task slots.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
-        )
         # AQE: runtime re-plan, shuffle coalescing, skew-join splitting —
         # mandatory at 100TB, harmless locally.
         .config("spark.sql.adaptive.enabled", "true")
@@ -79,9 +85,14 @@ def build_session(
     if master:
         builder = builder.master(master)
     elif not os.environ.get("SPARK_MASTER"):
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
         builder = builder.master(f"local[{cpus}]")
     for k, v in (extra or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    spark.conf.set(
+        "spark.sql.shuffle.partitions",
+        str(shuffle_partitions or spark.sparkContext.defaultParallelism),
+    )
     ensure_py_files(spark)
     return spark

@@ -258,14 +258,14 @@ SESSION_OUT_SCHEMA = StructType(
 # Keying state on a hash bucket of conv_id instead of conv_id itself is
 # the same scale move as dedup_state.py: one Python invocation + one
 # pandas column extraction per BUCKET per batch (amortized over its
-# conversations) instead of per conversation — measured ~12 ms of
-# applyInPandasWithState machinery per GROUP per batch regardless of
-# group size, which at 10^6+ live conversations would dominate the
-# stage. Buckets are uniform (hash of a high-cardinality key);
-# per-bucket state stays bounded by convs/bucket. Default 256 buckets
-# (see dedup_state.py for the measurement); like there, n_buckets is
-# part of the checkpoint contract — don't change it on a live
-# checkpoint.
+# conversations) instead of per conversation, which at 10^6+ live
+# conversations would dominate the stage. The applyInPandasWithState
+# machinery's fixed cost is per Python task (one per shuffle partition
+# per batch), with only a few ms more per group, so 256 buckets cost
+# little over 32 (see dedup_state.py for the measurement). Buckets are
+# uniform (hash of a high-cardinality key); per-bucket state stays
+# bounded by convs/bucket. Like there, n_buckets is part of the
+# checkpoint contract — don't change it on a live checkpoint.
 _SESSION_STATE_SCHEMA = StructType([StructField("blob", BinaryType())])
 
 _SESS_BUCKET_COL = "_sess_bucket"

@@ -176,6 +176,58 @@ class TestEnrichedStream:
         query4.awaitTermination(300)
         assert sink4.read_merged(spark).count() == n1 + n_extra
 
+    def test_restart_keeps_checkpointed_shuffle_partitions(
+        self, spark, turns_input, tmp_path
+    ):
+        # A checkpoint's state layout is fixed when it first starts: a
+        # restart under another spark.sql.shuffle.partitions keeps the
+        # checkpointed count and stays exactly-once.
+        import shutil
+
+        def drain(cfg):
+            query, sink = start_enriched_query(spark, cfg)
+            query.awaitTermination(300)
+            progress = query.recentProgress
+            return sink, {p.stateOperators[0].numShufflePartitions for p in progress}
+
+        def rows(sink):
+            return set(
+                sink.read_merged(spark).select("conv_id", "turn_idx", "json").collect()
+            )
+
+        inp = str(tmp_path / "in")
+        shutil.copytree(turns_input, inp)
+        cfg = PipelineConfig(input_path=inp, work_dir=str(tmp_path / "w"))
+        key = "spark.sql.shuffle.partitions"
+        prev = spark.conf.get(key)
+        try:
+            spark.conf.set(key, "8")
+            sink, parts = drain(cfg)
+            assert parts == {8}
+            n1 = sink.read_raw(spark).count()
+
+            appended = F.col("conv_id") >= f"conv_{N_CONVS:06d}"
+            extra = generate_turns(spark, n_convs=N_CONVS + 5, turns_per_conv=8).where(
+                appended
+            ).withColumn("ts", F.col("ts") + F.expr("INTERVAL 30 DAYS"))
+            n_extra = extra.count()
+            extra.coalesce(1).write.mode("append").parquet(inp)
+            spark.conf.set(key, "4")
+            sink, parts = drain(cfg)
+            assert parts == {8}
+            raw = sink.read_raw(spark)
+            assert raw.count() == n1 + n_extra
+            assert raw.where(appended).count() == n_extra
+
+            # the same input drained in one run from a fresh checkpoint
+            whole, parts = drain(
+                PipelineConfig(input_path=inp, work_dir=str(tmp_path / "whole"))
+            )
+            assert parts == {4}
+            assert rows(sink) == rows(whole)
+        finally:
+            spark.conf.set(key, prev)
+
     def test_dedup_flag_state_spans_batches(self, spark, cfg):
         cfg.max_files_per_trigger = 1  # force multiple microbatches
         query, sink = start_enriched_query(spark, cfg)

@@ -59,10 +59,8 @@ def main() -> None:
 
     import pyspark.sql.functions as F
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = build_session(
         app_name="micro-keywords",
-        master=f"local[{cpus}]",
         extra={"spark.ui.showConsoleProgress": "false"},
     )
     text = build_text()
